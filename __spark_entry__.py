@@ -52,6 +52,7 @@ from tstore_spark.operators.metric_rollup import (
     metric_rollup_all_tiers,
 )
 from tstore_spark.operators.skew import salted_agg
+from tstore_spark.plans.scope import op_scope, scoped_cache
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
@@ -1585,14 +1586,11 @@ def _q_bpe_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 5): previously each of the three tokenized the corpus independently.
     # round_partitions=16: the merge-round jobs are vocabulary-sized at gate
     # scale — the session's cascade-tuned partition count is pure overhead.
-    DD._evict_prior_caches()
-    toks = DD._cache_scoped(
-        docs.select("doc_id", _tokens("text").alias("_w"))
-    )
-    merges = bpe_train(
-        toks, merges=8, mark_word_end=True, round_partitions=16,
-        tokens_col="_w", evict=False,
-    )
+    with op_scope():
+        toks = scoped_cache(docs.select("doc_id", _tokens("text").alias("_w")))
+        merges = bpe_train(
+            toks, merges=8, mark_word_end=True, round_partitions=16, tokens_col="_w"
+        )
     rows = [(r["lhs"], r["rhs"]) for r in merges.orderBy("rank").collect()]
     enc = bpe_encode(toks, rows, mark_word_end=True, tokens_col="_w")
     dec = bpe_decode_tokens(enc, out_col="_dec")
@@ -1827,25 +1825,20 @@ def _q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE tokenize+hash pass for the whole gate (round 5): the sketch branch
     # and the exact branch both consume the same cached staged_token_hashes
     # frame — previously each ran its own doc-proportional pass (the
-    # two-tokenize-pass floor BENCH.md:619 named).
-    DD._evict_prior_caches()
-    staged = DD._cache_scoped(DD.staged_token_hashes(docs))
-    # scoped caches on the two pair SETS (a few hundred rows each): the plan
-    # consumes found 2x and exact 3x, and without the cache each consumer
-    # re-walks the whole band-join / shingle-join pipeline
-    found = DD._cache_scoped(
-        DD.simhash_near_dup_pairs(
-            docs, max_hamming=8, verify_jaccard=0.9,
-            token_hashes=staged, evict=False,
-        ).select("id_a", "id_b")
-    )
-    # evict=False: the staged + simhash scoped caches must stay warm for the
-    # same downstream action that consumes both branches
-    exact = DD._cache_scoped(
-        DD.shingle_jaccard_pairs_exact(
-            docs, threshold=0.9, evict=False, token_hashes=staged
+    # two-tokenize-pass floor BENCH.md:619 named). The pair SETS (a few
+    # hundred rows each) are cached too: the plan consumes found 2x and
+    # exact 3x, and without the cache each consumer re-walks the whole
+    # band-join / shingle-join pipeline. One op_scope keeps all of it warm.
+    with op_scope():
+        staged = scoped_cache(DD.staged_token_hashes(docs))
+        found = scoped_cache(
+            DD.simhash_near_dup_pairs(
+                docs, max_hamming=8, verify_jaccard=0.9, token_hashes=staged
+            ).select("id_a", "id_b")
         )
-    )
+        exact = scoped_cache(
+            DD.shingle_jaccard_pairs_exact(docs, threshold=0.9, token_hashes=staged)
+        )
     nf = found.agg(F.count(F.lit(1)).alias("_nf"))
     ne = exact.agg(F.count(F.lit(1)).alias("_ne"))
     bad = found.join(exact.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti").agg(
@@ -2469,16 +2462,14 @@ def _q_more_like_this(spark: SparkSession, sf_dir: str) -> DataFrame:
     lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).head()
     # scoped cache on the index: the operator consumes it on THREE paths
     # (query-doc postings, the query-term semi-join, df counts) and without
-    # the cache each re-runs the corpus tokenize+explode+groupBy; evict
-    # here, evict=False inside so the operator keeps this cache warm
-    DD._evict_prior_caches()
-    idx = DD._cache_scoped(build_inverted_index(docs))
-    # the synthetic corpus has a ~30-word vocab where every term is in
-    # >50% of docs, so the gate runs the df guard wide open (the guard
-    # itself is pytest-covered); ranking is still a full tf*idf ordering
-    out = more_like_this(
-        idx, [int(lo), int(hi)], k=10, max_terms=10, max_df_ratio=1.0, evict=False
-    )
+    # the cache each re-runs the corpus tokenize+explode+groupBy; the
+    # operator nests in this scope, so it keeps the cache warm
+    with op_scope():
+        idx = scoped_cache(build_inverted_index(docs))
+        # the synthetic corpus has a ~30-word vocab where every term is in
+        # >50% of docs, so the gate runs the df guard wide open (the guard
+        # itself is pytest-covered); ranking is still a full tf*idf ordering
+        out = more_like_this(idx, [int(lo), int(hi)], k=10, max_terms=10, max_df_ratio=1.0)
     return out.select(
         "query_id", "doc_id", "score", F.col("rank").cast("int").alias("rank")
     )

@@ -138,12 +138,13 @@ def test_index_deterministic_across_parallelism(spark, hashed_root):
 def test_materialize_evicts_prior_index(spark, hashed_root):
     from pyspark import StorageLevel
 
-    from tstore_spark.sources import bloom_index as bmod
+    from tstore_spark.plans.scope import op_scope
 
     first = bloom_file_index(spark, hashed_root, "k", m_bits=M, k=K)
     assert first.storageLevel != StorageLevel.NONE
     second = bloom_file_index(spark, hashed_root, "k", m_bits=M, k=K)
     assert first.storageLevel == StorageLevel.NONE
-    assert len(bmod._LIVE_INDEXES) == 1
-    bmod._evict_prior_indexes()
+    assert second.storageLevel != StorageLevel.NONE
+    with op_scope():  # the next top-level call releases the live index
+        pass
     assert second.storageLevel == StorageLevel.NONE

@@ -407,6 +407,42 @@ def test_gif_roundtrip_multi_frame():
         decode_gif(b"NOTAGIF0")
 
 
+def _small_gif() -> tuple[bytes, int]:
+    """A one-frame 12x8 GIF and the offset of its image descriptor."""
+    from tstore_spark.functions.media_codecs import encode_gif
+
+    pal = np.array([[0, 0, 0], [255, 0, 0], [0, 255, 0], [0, 0, 255]], np.uint8)
+    gif = encode_gif([(np.arange(8 * 12).reshape(8, 12) % 4).astype(np.uint8)], pal)
+    return gif, 13 + 3 * len(pal)  # header + 4-entry global color table
+
+
+def test_gif_frame_rectangle_outside_screen_raises():
+    from tstore_spark.functions.media_codecs import decode_gif
+
+    gif, desc = _small_gif()
+    bad = bytearray(gif)
+    bad[desc + 1 : desc + 3] = struct.pack("<H", 5)  # left=5, width 12 > screen 12
+    with pytest.raises(ValueError, match="invalid GIF: frame rectangle"):
+        decode_gif(bytes(bad))
+
+
+def test_gif_truncated_sub_block_raises():
+    from tstore_spark.functions.media_codecs import decode_gif
+
+    gif, desc = _small_gif()
+    # cut inside the first LZW data sub-block (descriptor 10 B + min code 1 B)
+    with pytest.raises(ValueError, match="invalid GIF: truncated sub-block"):
+        decode_gif(gif[: desc + 14])
+
+
+def test_gif_palette_over_256_entries_raises():
+    from tstore_spark.functions.media_codecs import encode_gif
+
+    frame = np.zeros((2, 2), np.uint8)
+    with pytest.raises(ValueError, match="1-256 entries"):
+        encode_gif([frame], np.zeros((257, 3), np.uint8))
+
+
 def test_gif_lzw_real_compression_codes():
     """The decoder handles REAL growing-table LZW (not just the encoder's
     clear-per-symbol form): a hand-packed stream using table-growth codes."""

@@ -14,6 +14,11 @@ BLOBS = [
     (3, b"<html><body>hi</body></html>"),
     (4, b"plain bytes payload"),
 ]
+#: what the strict decoder raises for each fake blob above, in order
+STRICT_DECODE_ERRORS = (
+    r"PNG missing IHDR|invalid JPEG: missing SOF/SOS|fmt chunk and/or data "
+    r"chunk missing|no codec for media type"
+)
 EXPECT_TYPE = {
     0: "image/png",
     1: "image/jpeg",
@@ -53,13 +58,12 @@ def test_strict_decodes_real_and_raises_per_blob(blobs_sdf):
     with no codec here (html/plain in the fixture; the truncated fake
     PNG/JPEG/WAV payloads fail inside their codecs, which is also loud)."""
     out = MM.decode_and_featurize(blobs_sdf, "doc_id", "blob", strict=True)
-    # WHICH blob's exception surfaces first is a task-scheduling race (the
-    # fixture's fakes fail in their codecs with format-specific messages:
-    # PNG IHDR, JPEG signature, wave fmt-chunk, html no-codec, ...) — so
-    # assert only that collection raises; the real-codec/strict dispatch
-    # behavior itself is pinned by the format-specific tests in
-    # test_media_codecs.py
-    with pytest.raises(Exception):
+    # WHICH blob's exception surfaces first is a task-scheduling race, so
+    # the match is the union of the fixture blobs' codec messages (PNG
+    # IHDR, JPEG SOF/SOS, wave fmt chunk, html/plain no codec); the
+    # real-codec/strict dispatch behavior itself is pinned by the
+    # format-specific tests in test_media_codecs.py
+    with pytest.raises(Exception, match=STRICT_DECODE_ERRORS):
         out.collect()
 
 

@@ -53,11 +53,7 @@ def test_prefix_join_finds_exact_duplicate_at_one(spark):
 def test_prefix_postings_are_smaller_than_full_postings(spark):
     """The scale claim: prefix postings shrink with the threshold and are a
     strict subset of the full exploded postings."""
-    from tstore_spark.operators.dedup import (
-        _evict_prior_caches,
-        exploded_hashed_shingles,
-        with_hashed_shingles,  # noqa: F401  (import parity)
-    )
+    from tstore_spark.operators.dedup import exploded_hashed_shingles
 
     docs = _corpus(spark)
     full = exploded_hashed_shingles(docs).count()
@@ -68,7 +64,6 @@ def test_prefix_postings_are_smaller_than_full_postings(spark):
 
         from tstore_spark.operators import dedup as DD
 
-        _evict_prior_caches()
         sh = DD.with_hashed_shingles(docs)
         ex = sh.select(F.col("doc_id"), F.explode("shingles").alias("gram"))
         freq = ex.groupBy("gram").agg(F.count(F.lit(1)).alias("_df"))

@@ -125,15 +125,15 @@ def test_materialize_evicts_prior_manifest(spark, clustered_root):
     manifests in a long-lived session (bench loops, maintenance jobs)."""
     from pyspark import StorageLevel
 
-    from tstore_spark.sources import zonemaps as zmod
+    from tstore_spark.plans.scope import op_scope
 
     first = zone_maps(spark, clustered_root, ["k"])
     assert first.storageLevel != StorageLevel.NONE
     second = zone_maps(spark, clustered_root, ["k"])
     assert second.storageLevel != StorageLevel.NONE
     assert first.storageLevel == StorageLevel.NONE  # evicted by the refresh
-    assert len(zmod._LIVE_MANIFESTS) == 1
-    zmod._evict_prior_manifests()
+    with op_scope():  # the next top-level call releases the live manifest
+        pass
     assert second.storageLevel == StorageLevel.NONE
 
 

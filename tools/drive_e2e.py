@@ -713,7 +713,9 @@ def main() -> int:
         stream = (spark.readStream.schema(schema)
                   .option("maxFilesPerTrigger", 1).parquet(chg + "/f*"))
         q = apply_stream_upserts(stream, ev_base, order_col="seq")
-        q.awaitTermination(120)
+        if not q.awaitTermination(120):
+            q.stop()
+            raise RuntimeError("stream CDC apply did not finish in 120s")
         final = _oa(spark, ev_base, with_attributes=False).df
         updated = final.where(F.col("value") >= 200.0).count()
         check("stream CDC apply: last micro-batch wins",
@@ -932,7 +934,9 @@ def main() -> int:
               .option("path", f"{tmp}/monitor_out")
               .option("checkpointLocation", f"{tmp}/monitor_ckpt")
               .outputMode("append").trigger(availableNow=True).start())
-        mq.awaitTermination(120)
+        if not mq.awaitTermination(120):
+            mq.stop()
+            raise RuntimeError("stream monitor query did not finish in 120s")
         mrep = progress_report(mq)
         assert_watermark_monotone(mrep)
         check("stream monitor: observed rows == input, watermark monotone",

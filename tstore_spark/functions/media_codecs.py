@@ -814,18 +814,38 @@ def _gif_lzw(data: bytes, min_code_size: int, npix: int) -> bytes:
     return bytes(out[:npix])
 
 
+def _gif_need(blob: bytes, end: int, what: str) -> None:
+    if end > len(blob):
+        raise ValueError(f"invalid GIF: truncated {what}")
+
+
+def _gif_sub_blocks(blob: bytes, pos: int) -> tuple[list[bytes], int]:
+    """Sub-block chain at ``pos`` -> (blocks, position past the terminator)."""
+    blocks = []
+    while True:
+        _gif_need(blob, pos + 1, "sub-block")
+        sz = blob[pos]
+        if not sz:
+            return blocks, pos + 1
+        _gif_need(blob, pos + 1 + sz, "sub-block")
+        blocks.append(blob[pos + 1 : pos + 1 + sz])
+        pos += 1 + sz
+
+
 def decode_gif(blob: bytes) -> list[np.ndarray]:
     """Decode every frame of a GIF87a/89a to ``uint8 (h, w, 3)`` canvases
     (each frame composited over the logical screen, honoring transparency
     and disposal 0-3)."""
     if blob[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF (missing GIF87a/GIF89a signature)")
+    _gif_need(blob, 13, "logical screen descriptor")
     w, h = struct.unpack("<HH", blob[6:10])
     flags, bg = blob[10], blob[11]
     pos = 13
     gct = None
     if flags & 0x80:
         n = 2 ** ((flags & 7) + 1)
+        _gif_need(blob, pos + 3 * n, "color table")
         gct = np.frombuffer(blob[pos : pos + 3 * n], np.uint8).reshape(n, 3)
         pos += 3 * n
     canvas = np.zeros((h, w, 3), np.uint8)
@@ -840,38 +860,35 @@ def decode_gif(blob: bytes) -> list[np.ndarray]:
         if b0 == 0x3B:  # trailer
             break
         if b0 == 0x21:  # extension: label + sub-blocks
+            _gif_need(blob, pos + 2, "extension")
             label = blob[pos + 1]
-            pos += 2
-            blocks = []
-            while blob[pos] != 0:
-                sz = blob[pos]
-                blocks.append(blob[pos + 1 : pos + 1 + sz])
-                pos += 1 + sz
-            pos += 1
+            blocks, pos = _gif_sub_blocks(blob, pos + 2)
             if label == 0xF9 and blocks:  # graphic control extension
                 gflags = blocks[0][0]
                 disposal = (gflags >> 2) & 7
                 transparent = blocks[0][3] if gflags & 1 else None
         elif b0 == 0x2C:  # image descriptor
+            _gif_need(blob, pos + 10, "image descriptor")
             x, y, iw, ih = struct.unpack("<HHHH", blob[pos + 1 : pos + 9])
+            if x + iw > w or y + ih > h:
+                raise ValueError(
+                    f"invalid GIF: frame rectangle {iw}x{ih}+{x}+{y} extends "
+                    f"past the {w}x{h} logical screen"
+                )
             iflags = blob[pos + 9]
             pos += 10
             ct = gct
             if iflags & 0x80:
                 n = 2 ** ((iflags & 7) + 1)
+                _gif_need(blob, pos + 3 * n, "color table")
                 ct = np.frombuffer(blob[pos : pos + 3 * n], np.uint8).reshape(n, 3)
                 pos += 3 * n
             if ct is None:
                 raise ValueError("invalid GIF: image with no color table")
+            _gif_need(blob, pos + 1, "image data")
             min_code = blob[pos]
-            pos += 1
-            data = bytearray()
-            while blob[pos] != 0:
-                sz = blob[pos]
-                data += blob[pos + 1 : pos + 1 + sz]
-                pos += 1 + sz
-            pos += 1
-            idx = np.frombuffer(_gif_lzw(bytes(data), min_code, iw * ih), np.uint8)
+            blocks, pos = _gif_sub_blocks(blob, pos + 1)
+            idx = np.frombuffer(_gif_lzw(b"".join(blocks), min_code, iw * ih), np.uint8)
             if int(idx.max(initial=0)) >= len(ct):
                 raise ValueError("invalid GIF: palette index out of range")
             grid = idx.reshape(ih, iw)
@@ -920,6 +937,8 @@ def encode_gif(index_frames: list[np.ndarray], palette: np.ndarray) -> bytes:
         raise ValueError("encode_gif needs at least one frame")
     h, w = index_frames[0].shape
     n = len(palette)
+    if not 1 <= n <= 256:
+        raise ValueError(f"GIF palette must have 1-256 entries, got {n}")
     bits = max(2, int(n - 1).bit_length())
     size = 1 << bits
     pal = np.zeros((size, 3), np.uint8)

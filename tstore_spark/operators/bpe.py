@@ -44,6 +44,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tstore_spark.plans.scope import op_scope, scoped_cache
+
 #: words longer than this never train (crawler garbage / base64 blobs);
 #: the oracle applies the same rule, so it is semantics, not truncation.
 DEFAULT_MAX_WORD_LEN = 64
@@ -104,6 +106,7 @@ def _merge_fold(syms, left: str, right: str) -> "F.Column":
 WORD_END = "</w>"
 
 
+@op_scope()
 def bpe_train(
     corpus: DataFrame,
     text_col: str = "text",
@@ -112,7 +115,6 @@ def bpe_train(
     mark_word_end: bool = False,
     round_partitions: int | None = None,
     tokens_col: str | None = None,
-    evict: bool = True,
 ) -> DataFrame:
     """Learn ``merges`` BPE merge rules; returns the merge table
     ``(rank int, lhs string, rhs string, token string, pair_count bigint)``
@@ -139,12 +141,6 @@ def bpe_train(
     """
     if merges < 1:
         raise ValueError(f"merges must be >= 1, got {merges}")
-    from tstore_spark.operators.dedup import _cache_scoped, _evict_prior_caches
-
-    if evict:
-        # evict=False: the caller composed a shared cached frame (e.g. a
-        # pre-tokenized corpus passed via tokens_col) that must stay warm
-        _evict_prior_caches()
     spark = corpus.sparkSession
     syms = F.split("word", "")
     if mark_word_end:
@@ -153,7 +149,7 @@ def bpe_train(
             syms,
             lambda s, i: F.when(i == n - 1, F.concat(s, F.lit(WORD_END))).otherwise(s),
         )
-    words = _cache_scoped(
+    words = scoped_cache(
         word_counts(corpus, text_col, max_word_len, tokens_col=tokens_col).select(
             "freq", syms.alias("syms")
         )

@@ -36,6 +36,7 @@ from tstore_spark.functions.text import (
     word_ngrams,
     ws_token_count,
 )
+from tstore_spark.plans.scope import op_scope, scoped_cache
 
 
 def corpus_filter(
@@ -394,6 +395,7 @@ def chunk_documents(
     )
 
 
+@op_scope()
 def term_cooccurrence(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -425,10 +427,7 @@ def term_cooccurrence(
     # the tokenized postings feed three aggregations (pair join, df counts,
     # corpus size): scope-cache them or the doc-proportional tokenize +
     # array_distinct work runs three times per action (the
-    # shingle_jaccard_pairs_exact discipline, dedup.py's registry)
-    from tstore_spark.operators.dedup import _cache_scoped, _evict_prior_caches
-
-    _evict_prior_caches()
+    # shingle_jaccard_pairs_exact discipline)
     staged = df.where(
         F.col(text_col).isNotNull() & (F.length(F.trim(text_col)) > 0)
     ).select(F.col(id_col).alias("_id"), F.array_distinct(tokens(text_col)).alias("_tk"))
@@ -446,7 +445,7 @@ def term_cooccurrence(
             )
         ).alias("_tk"),
     )
-    guarded = _cache_scoped(guarded)
+    guarded = scoped_cache(guarded)
     posts = guarded.select("_id", F.explode("_tk").alias("_t"))
     a, b = posts.alias("a"), posts.alias("b")
     pairs = (

@@ -34,38 +34,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
 
 from tstore_spark.functions.text import fingerprint, tokens
-
-# ---------------------------------------------------------------------------
-# scoped caching: the pair operators cache doc-proportional intermediates
-# (signatures, banded rows, hashed shingles) because each is consumed 2-3
-# times within one call. A long-lived session calling the operators
-# repeatedly (bench loops, corpus pipelines) must not accumulate one cached
-# copy per call, so each new call first unpersists the previous call's
-# caches. Consequence: a DataFrame RETURNED by an earlier call stays correct
-# if evaluated later (lineage recomputes), it just loses the warm cache.
-# ---------------------------------------------------------------------------
-
-_LIVE_CACHES: list[DataFrame] = []
-
-
-def _evict_prior_caches() -> None:
-    while _LIVE_CACHES:
-        try:
-            _LIVE_CACHES.pop().unpersist(False)
-        except Exception:  # session gone / already unpersisted — nothing to free
-            pass
-
-
-def _cache_scoped(df: DataFrame, storage_level=None) -> DataFrame:
-    """Register df in the module cache registry. ``storage_level=None`` uses
-    ``cache()`` (MEMORY_AND_DISK deserialized); pass
-    ``StorageLevel.DISK_ONLY`` for corpus-proportional intermediates —
-    memory-safe at any scale, still computed once (the duplicate_spans
-    posting table OOMed an 8 GiB heap at 10^6 docs under the default level)."""
-    df = df.cache() if storage_level is None else df.persist(storage_level)
-    _LIVE_CACHES.append(df)
-    return df
-
+from tstore_spark.plans.scope import op_scope, scoped_cache
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -207,6 +176,7 @@ def jaccard(a: Column, b: Column) -> Column:
 MAX_BLOCK_CANDIDATES = 10_000_000
 
 
+@op_scope()
 def token_jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -226,7 +196,6 @@ def token_jaccard_pairs(
     next to the pairwise join it protects); ``max_block_candidates=None``
     disables it. Same guard pattern as ``TSLong.to_tswide``'s id cap.
     """
-    _evict_prior_caches()
     if block_col is None and max_block_candidates is not None:
         # unblocked = one global block: guard on the total row count
         n = df.count()
@@ -282,7 +251,7 @@ def token_jaccard_pairs(
     # expression back into the JOIN condition, re-running array_intersect for
     # every raw block pair instead of only the length-filtered survivors
     # (measured ~8x slower at sf0.1: 622k vs 41k intersects).
-    pared = _cache_scoped(
+    pared = scoped_cache(
         a.join(b, cond).select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
@@ -303,13 +272,13 @@ def token_jaccard_pairs(
     )
 
 
+@op_scope()
 def shingle_jaccard_pairs_exact(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
     threshold: float = 0.8,
-    evict: bool = True,
     token_hashes: DataFrame | None = None,
 ) -> DataFrame:
     """EXACT shingle-Jaccard pairs via the shared-shingle equi-join — the
@@ -330,13 +299,7 @@ def shingle_jaccard_pairs_exact(
     ``round(J, 4) >= t`` filter from dropping a boundary pair.
     """
     # the exploded table is consumed 3x (sizes + both join sides): cache it
-    # per the module's discipline or the doc-proportional tokenize+hash work
-    # runs three times. evict=True (the default) first drops the PREVIOUS
-    # call's caches, the module's standing leak guard; pass evict=False when
-    # composing with another pair operator whose caches must stay warm for
-    # the same downstream action (the _q_simhash pattern).
-    if evict:
-        _evict_prior_caches()
+    # or the doc-proportional tokenize+hash work runs three times
     staged = (
         token_hashes
         if token_hashes is not None
@@ -351,7 +314,7 @@ def shingle_jaccard_pairs_exact(
     # gram hashing. The size rides every gram row so the length-ratio prune
     # happens IN the join condition and the old two sizes-lookup joins
     # disappear.
-    arr = _cache_scoped(
+    arr = scoped_cache(
         staged.select(F.col(id_col), _hashed_shingle_expr(F.col("_th"), n).alias("_sh"))
     )
     ex = arr.select(
@@ -381,6 +344,7 @@ def shingle_jaccard_pairs_exact(
     )
 
 
+@op_scope()
 def prefix_jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -388,7 +352,6 @@ def prefix_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.8,
     max_candidates: int | None = MAX_BLOCK_CANDIDATES,
-    evict: bool = True,
 ) -> DataFrame:
     """EXACT shingle-Jaccard pairs via prefix filtering (AllPairs,
     Chaudhuri et al. ICDE'06 / Bayardo WWW'07) — same output as
@@ -416,11 +379,9 @@ def prefix_jaccard_pairs(
     """
     if not 0.0 < threshold <= 1.0:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    if evict:
-        _evict_prior_caches()
     # slack threshold: emitted filter is round(J,4) >= t, i.e. J >= t - 5e-5
     t_eff = max(threshold - 1e-4, 1e-12)
-    sh = _cache_scoped(with_hashed_shingles(df, id_col, text_col, n))
+    sh = scoped_cache(with_hashed_shingles(df, id_col, text_col, n))
     ex = sh.select(F.col(id_col), F.explode("shingles").alias("gram"))
     # canonical order: (df asc, gram asc) — total within a doc (grams
     # distinct); struct array_sort is lexicographic over the fields. The
@@ -441,7 +402,7 @@ def prefix_jaccard_pairs(
     # J >= t_eff ⟹ |A∩B| >= ceil(t_eff·|A|) ⟹ a shared element sits in the
     # first |A| − ceil(t_eff·|A|) + 1 of BOTH docs' canonical orders
     p = s - F.ceil(s * F.lit(t_eff) - F.lit(1e-9)).cast("int") + F.lit(1)
-    prefix = _cache_scoped(
+    prefix = scoped_cache(
         ordered.select(
             F.col(id_col),
             s.alias("_n"),
@@ -492,6 +453,7 @@ def prefix_jaccard_pairs(
     )
 
 
+@op_scope()
 def containment_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -499,7 +461,6 @@ def containment_pairs(
     n: int = 3,
     threshold: float = 0.9,
     max_gram_df: int | None = None,
-    evict: bool = True,
 ) -> DataFrame:
     """Asymmetric shingle containment: ``(contained_id, container_id,
     containment)`` where containment = |S(a) ∩ S(b)| / |S(a)| ≥ threshold.
@@ -525,9 +486,7 @@ def containment_pairs(
     quote made of 95% boilerplate scored 0.05.) Default None = exact,
     matching the SQL oracle.
     """
-    if evict:
-        _evict_prior_caches()
-    ex = _cache_scoped(exploded_hashed_shingles(df, id_col, text_col, n))
+    ex = scoped_cache(exploded_hashed_shingles(df, id_col, text_col, n))
     sizes = ex.groupBy(id_col).agg(F.count(F.lit(1)).alias("_n"))
 
     def _pair_counts(postings: DataFrame, out: str) -> DataFrame:
@@ -545,7 +504,7 @@ def containment_pairs(
     if max_gram_df is not None:
         gram_df = ex.groupBy("gram").agg(F.count(F.lit(1)).alias("_df"))
         rare = ex.join(gram_df.where(F.col("_df") <= max_gram_df).select("gram"), "gram")
-        cand = _cache_scoped(_pair_counts(rare, "_inter_rare"))
+        cand = scoped_cache(_pair_counts(rare, "_inter_rare"))
         cand_ids = (
             cand.select(F.col("id_a").alias(id_col))
             .unionAll(cand.select(F.col("id_b").alias(id_col)))
@@ -665,6 +624,7 @@ def _minhash_band_table(sigs: DataFrame, id_col: str, bands: int, rows: int) -> 
     ).select(id_col, "b.band", "b.bh")
 
 
+@op_scope()
 def minhash_near_dup_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -682,8 +642,7 @@ def minhash_near_dup_pairs(
     """
     assert num_hashes % bands == 0
     rows = num_hashes // bands
-    _evict_prior_caches()
-    sigs = _cache_scoped(minhash_signatures(df, id_col, text_col, num_hashes, shingle_n))
+    sigs = scoped_cache(minhash_signatures(df, id_col, text_col, num_hashes, shingle_n))
 
     banded = _minhash_band_table(sigs, id_col, bands, rows)
 
@@ -725,7 +684,7 @@ def _verify_pairs(cand: DataFrame, sh: DataFrame, id_col: str, threshold: float)
     # AQE could mistakenly broadcast (driver materializes the whole build
     # side). Candidates shuffle by id; lookups hash-join per partition.
     look = sh.select(F.col(id_col), F.col("shingles"), F.size("shingles").alias("_n"))
-    pared = _cache_scoped(
+    pared = scoped_cache(
         cand.join(
             look.select(
                 F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"), F.col("_n").alias("_na")
@@ -781,6 +740,7 @@ def minhash_index(
     return minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
 
 
+@op_scope()
 def incremental_minhash_near_dup(
     new_docs: DataFrame,
     corpus_index: DataFrame,
@@ -812,11 +772,10 @@ def incremental_minhash_near_dup(
     """
     assert num_hashes % bands == 0
     rows = num_hashes // bands
-    _evict_prior_caches()
-    new_idx = _cache_scoped(
+    new_idx = scoped_cache(
         minhash_signatures(new_docs, id_col, text_col, num_hashes, shingle_n)
     )
-    nb = _cache_scoped(_minhash_band_table(new_idx, id_col, bands, rows))
+    nb = scoped_cache(_minhash_band_table(new_idx, id_col, bands, rows))
     cb = _minhash_band_table(corpus_index, id_col, bands, rows)
 
     # cross pairs: corpus doc x new doc sharing a band bucket. Both band
@@ -933,6 +892,7 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Da
     return df.select(F.col(id_col), _simhash64_from_hashes(hashes).alias("simhash"))
 
 
+@op_scope()
 def simhash_near_dup_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -942,7 +902,6 @@ def simhash_near_dup_pairs(
     shingle_n: int = 3,
     max_candidates: int | None = 200_000_000,
     token_hashes: DataFrame | None = None,
-    evict: bool = True,
 ) -> DataFrame:
     """Pairs with Hamming(simhash) <= max_hamming via band self-join.
 
@@ -967,14 +926,13 @@ def simhash_near_dup_pairs(
     heavily perturbed dups belong to :func:`minhash_near_dup_pairs`).
 
     ``token_hashes``: a precomputed (ideally cached)
-    :func:`staged_token_hashes` frame — pass it (with ``evict=False``) when
-    composing with another pair operator over the same corpus so the
-    doc-proportional tokenize+hash pass runs once total.
+    :func:`staged_token_hashes` frame — pass it (inside one
+    ``with op_scope():`` block) when composing with another pair operator
+    over the same corpus so the doc-proportional tokenize+hash pass runs
+    once total.
     """
     nb = max_hamming + 1
     width = 64 // nb
-    if evict:
-        _evict_prior_caches()
 
     def band_bits(bi: int) -> F.Column:
         shifted = F.shiftrightunsigned(F.col("simhash"), bi * width)
@@ -989,7 +947,7 @@ def simhash_near_dup_pairs(
     staged = (
         token_hashes
         if token_hashes is not None
-        else _cache_scoped(staged_token_hashes(df, id_col, text_col))
+        else scoped_cache(staged_token_hashes(df, id_col, text_col))
     )
     # empty/NULL docs vote with an empty arena -> signature 0 (same contract
     # as simhash()); shingles still use the single-truncated-shingle form
@@ -1036,7 +994,7 @@ def simhash_near_dup_pairs(
     # banded cache plus a second groupBy exchange just for the guard.
     _SALT_TARGET, _SALT_CAP = 512, 32
     bw = Window.partitionBy("band", "bits")
-    withs = _cache_scoped(
+    withs = scoped_cache(
         banded.withColumn("_n", F.count(F.lit(1)).over(bw)).withColumn(
             "_s",
             F.least(F.ceil(F.col("_n") / _SALT_TARGET), F.lit(_SALT_CAP)).cast("int"),
@@ -1292,6 +1250,7 @@ def sorted_neighborhood_pairs(
     )
 
 
+@op_scope()
 def duplicate_spans(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1347,7 +1306,6 @@ def duplicate_spans(
         raise ValueError(f"min_span_tokens must be >= n={n}, got {min_span}")
     from pyspark.sql import Window
 
-    _evict_prior_caches()
     toks = F.filter(F.split(F.col(text_col), r"\s+"), lambda t: t != F.lit(""))
     spark = df.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
@@ -1383,7 +1341,7 @@ def duplicate_spans(
         # tokens; the hashed rows are ~5x smaller but the level stays
         # conservative). Disk blocks stream back for the guard count and
         # both join sides; the n-fold gram build still runs exactly once.
-        posts = _cache_scoped(posts, storage_level=StorageLevel.DISK_ONLY)
+        posts = scoped_cache(posts, storage_level=StorageLevel.DISK_ONLY)
         # EAGER guard (round 5): postings already carry the 64-bit gram
         # hash, so the cap check is an 8-byte map-side-combined pass that
         # raises at CALL time. Hash collisions only MERGE counts — the cap
@@ -1549,7 +1507,7 @@ def remove_duplicate_spans(
     # span-grain and consumed by THREE joins below (touched semi, survivor
     # anti, marker) — without a scoped cache the whole upstream spans DAG
     # (pair join + islands) re-evaluates per consumer (measured ~3x)
-    merged = _cache_scoped(
+    merged = scoped_cache(
         islands.groupBy("_id", "_isl").agg(
             F.min("_lo").alias("_lo"), F.max("_hi").alias("_hi")
         )

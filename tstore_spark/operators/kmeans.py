@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tstore_spark.plans.scope import op_scope, scoped_cache
+
 #: lattice resolution: 1e-6 per cell, exact for |x| < 9e12.
 SCALE = 10**6
 
@@ -72,6 +74,7 @@ def _assign(q_df: DataFrame, centroids: list[list[int]]) -> DataFrame:
     return q_df.mapInPandas(kernel, schema=f"_id {id_type}, cluster int, dist2 long")
 
 
+@op_scope()
 def kmeans_exact(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -95,9 +98,6 @@ def kmeans_exact(
         raise ValueError(f"k must be >= 2, got {k}")
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
-    from tstore_spark.operators.dedup import _cache_scoped, _evict_prior_caches
-
-    _evict_prior_caches()
     q = df.where(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("_id"), quantize_expr(vec_col).alias("_q")
     )
@@ -113,7 +113,7 @@ def kmeans_exact(
     dim = len(centroids[0])
     # dimension guard rides the vector column itself (never pruned away):
     # a ragged corpus aborts instead of scoring garbage distances
-    q = _cache_scoped(
+    q = scoped_cache(
         q.select(
             "_id",
             F.when(F.size("_q") == dim, F.col("_q")).otherwise(

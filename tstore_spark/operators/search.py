@@ -42,6 +42,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tstore_spark.plans.scope import op_scope, scoped_cache
+
 TOKEN_SPLIT = "[^a-z0-9]+"
 
 
@@ -203,6 +205,7 @@ def doc_lengths(index: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return index.groupBy(id_col).agg(F.sum("tf").alias("_dl"))
 
 
+@op_scope()
 def bm25_topk(
     index: DataFrame,
     terms: list[str],
@@ -227,10 +230,7 @@ def bm25_topk(
     previous shape re-ran the full-index groupBy per query, twice."""
     t = _norm_terms(terms)
     if dl is None:
-        from tstore_spark.operators.dedup import _cache_scoped, _evict_prior_caches
-
-        _evict_prior_caches()
-        dl = _cache_scoped(doc_lengths(index, id_col))
+        dl = scoped_cache(doc_lengths(index, id_col))
     n_docs, avgdl = dl.agg(F.count(F.lit(1)), F.avg("_dl")).head()
     if not n_docs:
         raise ValueError("empty index")
@@ -283,6 +283,7 @@ def bm25_reference(
     return out[:k]
 
 
+@op_scope()
 def more_like_this(
     index: DataFrame,
     query_ids: list,
@@ -292,7 +293,6 @@ def more_like_this(
     id_col: str = "doc_id",
     n_docs: int | None = None,
     idf_scale: int = 1_000_000,
-    evict: bool = True,
 ) -> DataFrame:
     """Top-k similar documents per query document — Lucene's MoreLikeThis,
     through the posting table.
@@ -325,8 +325,6 @@ def more_like_this(
     distinct-count aggregation here."""
     from pyspark.sql.window import Window
 
-    from tstore_spark.operators.dedup import _cache_scoped, _evict_prior_caches
-
     if not query_ids:
         raise ValueError("query_ids must be non-empty")
     max_df = None
@@ -341,13 +339,9 @@ def more_like_this(
         F.col(id_col).alias("query_id"), "token", F.col("tf").alias("_tf_q")
     )
     # one semi-join bounds everything downstream to postings of query terms;
-    # cached so the df pass and the scoring pass share the scan.
-    # evict=False when the CALLER holds its own scoped cache (e.g. a cached
-    # index consumed by several passes) that must stay warm — the module's
-    # standing composition contract (shingle_jaccard_pairs_exact pattern).
-    if evict:
-        _evict_prior_caches()
-    qterm_post = _cache_scoped(
+    # cached so the df pass and the scoring pass share the scan. A caller
+    # whose own scoped index must stay warm calls this inside its op_scope.
+    qterm_post = scoped_cache(
         index.join(F.broadcast(qpost.select("token").distinct()), "token")
     )
     dfs = qterm_post.groupBy("token").agg(F.count(F.lit(1)).alias("_df"))

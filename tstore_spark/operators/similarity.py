@@ -29,6 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from tstore_spark.plans.scope import op_scope, scoped_cache
+
 # ---------------------------------------------------------------------------
 # exact cosine helpers (JVM expressions, sequential double accumulation)
 # ---------------------------------------------------------------------------
@@ -405,6 +407,7 @@ def assign_nearest_seed(
     )
 
 
+@op_scope()
 def semantic_dedup(
     vectors: DataFrame,
     threshold: float = 0.8,
@@ -460,14 +463,10 @@ def semantic_dedup(
             .drop("_csz")
         )
         join_keys = ["cluster", "_sub"]
-    # reused by the pair join (both sides) + output. Scoped like dedup.py's
-    # caches: a long-lived session calling semantic_dedup per corpus shard
-    # would otherwise accumulate one cached copy of the FULL embedding
-    # column per call (the exact leak _evict_prior_caches exists to stop).
-    from tstore_spark.operators.dedup import _cache_scoped, _evict_prior_caches
-
-    _evict_prior_caches()
-    assigned = _cache_scoped(assigned)
+    # reused by the pair join (both sides) + output. Scoped: a long-lived
+    # session calling semantic_dedup per corpus shard would otherwise
+    # accumulate one cached copy of the FULL embedding column per call.
+    assigned = scoped_cache(assigned)
     a = assigned.alias("a")
     b = assigned.alias("b")
     sim = F.round(cosine(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}")), round_digits)

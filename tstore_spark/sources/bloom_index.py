@@ -41,23 +41,11 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tstore_spark.plans.scope import op_scope, scoped_cache
 from tstore_spark.sources.zonemaps import _list_parquet
 
 DEFAULT_M_BITS = 1 << 17
 DEFAULT_K = 5
-
-#: persisted manifests from bloom_file_index(materialize=True); each fresh
-#: materialize evicts the prior generation (zonemaps._LIVE_MANIFESTS
-#: discipline) so long-lived sessions never accumulate cached copies.
-_LIVE_INDEXES: list[DataFrame] = []
-
-
-def _evict_prior_indexes() -> None:
-    while _LIVE_INDEXES:
-        try:
-            _LIVE_INDEXES.pop().unpersist(False)
-        except Exception:
-            pass
 
 
 def bloom_file_index(
@@ -75,7 +63,10 @@ def bloom_file_index(
     One column-pruned scan; two map-side-combined shuffles keyed by
     (file, word) then file — per-file state is bounded at m/64 words no
     matter how many rows the file holds. ``n_items`` is exact (every row
-    emits exactly k cells, duplicates included, so sum(cells)/k = rows)."""
+    emits exactly k cells, duplicates included, so sum(cells)/k = rows).
+    A ``materialize``d manifest stays warm until the thread's next top-level
+    operator call, or until the first one after an enclosing ``op_scope``
+    exits (plans/scope.py)."""
     if m_bits % 64:
         raise ValueError("m_bits must be a multiple of 64")
     n_words = m_bits // 64
@@ -126,10 +117,9 @@ def bloom_file_index(
         "path", F.coalesce("n_items", F.lit(0)).alias("n_items"), "words"
     )
     if materialize:
-        _evict_prior_indexes()
-        idx = idx.persist()
-        _LIVE_INDEXES.append(idx)
-        idx.count()
+        with op_scope():
+            idx = scoped_cache(idx)
+            idx.count()
     return idx
 
 

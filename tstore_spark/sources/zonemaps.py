@@ -34,6 +34,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tstore_spark.plans.scope import op_scope, scoped_cache
+
 
 def _list_parquet(root: str) -> list[str]:
     out = []
@@ -45,21 +47,6 @@ def _list_parquet(root: str) -> list[str]:
         dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
         out.extend(os.path.join(dirpath, f) for f in files if f.endswith(".parquet"))
     return sorted(out)
-
-
-#: persisted manifests from zone_maps(materialize=True); a fresh materialize
-#: evicts the prior generation so long-lived sessions (bench loops,
-#: maintenance jobs) never accumulate cached copies — the same discipline as
-#: operators/dedup._evict_prior_caches.
-_LIVE_MANIFESTS: list[DataFrame] = []
-
-
-def _evict_prior_manifests() -> None:
-    while _LIVE_MANIFESTS:
-        try:
-            _LIVE_MANIFESTS.pop().unpersist(False)
-        except Exception:
-            pass
 
 
 def zone_maps(
@@ -75,16 +62,17 @@ def zone_maps(
     ``materialize`` (default) runs the footer job ONCE and persists the
     O(#files) result — the Iceberg-manifest behavior. Without it the
     DataFrame is lazy and every ``prune_paths`` call re-reads every footer
-    (measured 6x the pruned-read cost on repeated probes)."""
+    (measured 6x the pruned-read cost on repeated probes). The manifest
+    stays warm until the thread's next top-level operator call, or until the
+    first one after an enclosing ``op_scope`` exits (plans/scope.py)."""
     paths = _list_parquet(root)
     if not paths:
         raise ValueError(f"no parquet files under {root}")
     zm = _manifest_df(spark, paths, columns)
     if materialize:
-        _evict_prior_manifests()
-        zm = zm.persist()
-        _LIVE_MANIFESTS.append(zm)
-        zm.count()
+        with op_scope():
+            zm = scoped_cache(zm)
+            zm.count()
     return zm
 
 

@@ -1931,14 +1931,17 @@ def _q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HLL sketch vs exact distinct, as an oracle-checkable invariant: the
-    estimate must land within 2% of count(DISTINCT user_id) per group (p=12
-    => 1.6% standard error; the small-range linear-counting regime at these
-    cardinalities is tighter still). The boolean is deterministic — fixed
-    hash, fixed registers — so the row hash-matches DuckDB's TRUE."""
-    from tstore_spark.operators.sketches import hll_sketch, with_hll_estimate
+    built-in ``hll_sketch_agg`` (lgK 12 => 1.6% standard error; small
+    cardinalities sit in the near-exact sparse modes) estimated through
+    ``sketches.hll_estimate`` must land within 2% of count(DISTINCT user_id)
+    per group. The estimate is independent of partition layout, so the
+    boolean is deterministic and the row hash-matches DuckDB's TRUE."""
+    from tstore_spark.operators.sketches import hll_estimate
 
     ev = _t(spark, sf_dir, "events")
-    sk = with_hll_estimate(hll_sketch(ev, ["event_type"], "user_id"))
+    sk = ev.groupBy("event_type").agg(
+        hll_estimate(F.hll_sketch_agg("user_id")).alias("distinct_est")
+    )
     exact = ev.groupBy("event_type").agg(F.countDistinct("user_id").alias("user_distinct"))
     within = (
         F.abs(F.col("distinct_est") - F.col("user_distinct"))
@@ -2670,18 +2673,19 @@ def _q_stream_gap_fill_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_stream_cascade_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct-user sketches THROUGH the streaming cascade (round-3 close of
-    the lambda split): the HLL register index joins the chained window aggs'
-    grouping key and max(rank) carries register state across every stateful
-    stage, so each closed hour's streamed sketch is register-identical to the
-    batch hll_sketch (tests/test_streaming.py proves array equality). Gate
-    invariant: the streamed estimate lands within the sketch error bound of
-    the exact per-hour distinct-user count, and counts/bytes stay exact.
+    the lambda split): ``hll_sketch_agg`` in the minute stage and
+    ``hll_union_agg`` in the hour stage carry one sketch per (type, window)
+    through the chained window aggs, so each closed hour's
+    ``sketches.hll_estimate`` equals the batch estimate
+    (tests/test_streaming.py proves the equality). Gate invariant: the
+    streamed estimate lands within the sketch error bound of the exact
+    per-hour distinct-user count, and counts/bytes stay exact.
     Oracle: the same closed hours + exact distincts + TRUE in plain SQL."""
     import re as _re
     import shutil as _sh
 
     from tstore_spark.functions.timeparts import ntz_epoch_seconds
-    from tstore_spark.operators.sketches import with_hll_estimate
+    from tstore_spark.operators.sketches import hll_estimate
     from tstore_spark.streaming.stream_rollup import (
         read_pages_stream,
         stream_rollup_cascade,
@@ -2707,8 +2711,7 @@ def _q_stream_cascade_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not q.awaitTermination(900):  # partial-sink guard (see stream_gap_fill)
         q.stop()
         raise RuntimeError("streaming gate: query still active after 900s")
-    got = with_hll_estimate(spark.read.parquet(f"{base}/tier1h"))
-    got = got.select(
+    got = spark.read.parquet(f"{base}/tier1h").select(
         F.col("domain").alias("event_type"),
         F.expr(
             "timestampadd(SECOND, unix_seconds(window_start),"
@@ -2716,7 +2719,7 @@ def _q_stream_cascade_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("window_start"),
         "doc_count",
         "bytes_total",
-        "distinct_est",
+        hll_estimate("hll").alias("distinct_est"),
     )
     exact = (
         _t(spark, sf_dir, "events")
@@ -4204,15 +4207,18 @@ def _sax_words_oracle() -> str:
 
 
 def _q_hll_union_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sketch mergeability through the gate: per-day HLL sketches merged to a
-    per-type total must estimate within 2% of the exact distinct count —
-    i.e. merging daily registers is as good as sketching the raw stream
-    (they are bit-identical by construction of the register max-merge)."""
-    from tstore_spark.operators.sketches import hll_merge, hll_sketch, with_hll_estimate
+    """Sketch mergeability through the gate: per-day HLL sketches
+    (``hll_sketch_agg``) merged to a per-type total (``hll_union_agg``) must
+    estimate within 2% of the exact distinct count — i.e. merging daily
+    sketches is as good as sketching the raw stream (their
+    ``sketches.hll_estimate`` values are equal)."""
+    from tstore_spark.operators.sketches import hll_estimate
 
     ev = _t(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
-    daily = hll_sketch(ev, ["event_type", "day"], "user_id")
-    merged = with_hll_estimate(hll_merge(daily.drop("day"), ["event_type"]))
+    daily = ev.groupBy("event_type", "day").agg(F.hll_sketch_agg("user_id").alias("hll"))
+    merged = daily.groupBy("event_type").agg(
+        hll_estimate(F.hll_union_agg("hll")).alias("distinct_est")
+    )
     exact = ev.groupBy("event_type").agg(F.countDistinct("user_id").alias("user_distinct"))
     within = (
         F.abs(F.col("distinct_est") - F.col("user_distinct")) <= 0.02 * F.col("user_distinct")
@@ -4415,12 +4421,13 @@ def _q_benford_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_hyperball(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperBall neighborhood function + harmonic centrality
-    (operators/graph.py hyperball): HLL counters max-merged along edges,
-    constant state per node — the billion-node path the exact pair table
-    cannot walk. Gate emits the EXACT t-ball sizes (neighborhood_exact,
-    hash-checked vs a recursive reachability CTE) with the HLL estimates
-    asserted inside a 25%+0.5 relative bound per node (deterministic
-    registers: the bound is stable, the hll_distinct_users pattern)."""
+    (operators/graph.py hyperball): one built-in HLL sketch per node,
+    union-merged along edges — constant state per node, the billion-node
+    path the exact pair table cannot walk. Gate emits the EXACT t-ball sizes
+    (neighborhood_exact, hash-checked vs a recursive reachability CTE) with
+    the HLL estimates asserted inside a 25%+0.5 relative bound per node
+    (``sketches.hll_estimate`` is layout-independent, so the bound is
+    stable — the hll_distinct_users pattern)."""
     from tstore_spark.operators.graph import hyperball, neighborhood_exact
 
     edges = _planted_graph(_t(spark, sf_dir, "documents"))

@@ -62,15 +62,21 @@ def test_value_sum_exact(events_sdf):
 
 
 def test_id_sketch_cascade_and_accuracy(events_sdf):
-    """HLL id-sketch path: cascaded registers == from-raw registers
-    (bit-identical), estimates near exact counts."""
+    """HLL id-sketch path: cascaded estimates == from-raw estimates
+    (exactly), estimates near exact counts."""
     from tstore_spark.operators.metric_rollup import metric_rollup_all_tiers as all_tiers
+    from tstore_spark.operators.sketches import hll_estimate
 
     tiers = all_tiers(events_sdf, id_sketch=True)
     direct = metric_rollup_from_raw(events_sdf, "1d", id_sketch=True)
-    c = {(r["event_type"], r["window_start"]): r["hll"] for r in tiers["1d"].collect()}
-    d = {(r["event_type"], r["window_start"]): r["hll"] for r in direct.collect()}
-    assert c == d  # merge(1h sketches) == sketch(raw), register-exact
+
+    def _est(df):
+        return {(r["event_type"], r["window_start"]): r["e"]
+                for r in df.select("event_type", "window_start",
+                                   hll_estimate("hll").alias("e")).collect()}
+
+    c, d = _est(tiers["1d"]), _est(direct)
+    assert c == d  # union(1h sketches) estimates exactly as sketch(raw)
 
     est = finalize(tiers["1d"])
     exact = finalize(metric_rollup_all_tiers(events_sdf)["1d"])
@@ -78,6 +84,40 @@ def test_id_sketch_cascade_and_accuracy(events_sdf):
     x = {(r["event_type"], r["window_start"]): r["user_distinct"] for r in exact.collect()}
     for k in x:
         assert abs(e[k] - x[k]) <= max(3, 0.1 * x[k]), (k, e[k], x[k])
+
+
+def test_id_sketch_cascade_plans_no_join_and_no_python(spark, events_sdf, tmp_path):
+    """Over a materialized id_sketch tier the HLL merge rides the cascade's
+    one groupBy (no merge join), its estimate is a JVM expression (no
+    Python), and a query that never reads ``hll`` prunes it entirely."""
+    import io
+    from contextlib import redirect_stdout
+    from datetime import datetime
+
+    from tstore_spark.operators.metric_rollup import metric_rollup_cascade
+    from tstore_spark.operators.sketches import hll_estimate
+    from tstore_spark.operators.tierselect import range_aggregate
+
+    tiers = {}
+    for tier, df in metric_rollup_all_tiers(events_sdf, id_sketch=True).items():
+        df.write.parquet(str(tmp_path / tier))
+        tiers[tier] = spark.read.parquet(str(tmp_path / tier))
+
+    def plan(df):
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            df.explain("formatted")
+        return buf.getvalue()
+
+    p = plan(metric_rollup_cascade(tiers["1h"], "1d").select(
+        "event_type", "window_start", "event_count", "value_cents",
+        hll_estimate("hll").alias("user_distinct")))
+    assert "Join" not in p
+    assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
+    p = plan(range_aggregate(tiers, datetime(2024, 3, 1, 0, 7), datetime(2024, 3, 2, 5, 0))
+             .select("event_type", "event_count", "value_cents"))
+    assert "Join" not in p and "Generate" not in p
+    assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
 
 
 def test_value_sketch_cascade_and_accuracy(events_sdf):

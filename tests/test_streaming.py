@@ -119,15 +119,16 @@ def test_stream_restart_is_idempotent(spark, stream_dirs):
     assert got.where("count > 1").count() == 0
 
 
-def test_stream_cascade_hll_registers_match_batch_sketch(spark, stream_dirs):
-    """HLL distincts through the chained cascade: register state (max rank
-    per register) carries through every stateful stage, so each CLOSED hour's
-    sparse register array is IDENTICAL to the batch hll_sketch over the same
-    rows — the streamed sketch is the batch sketch, not an approximation of
-    it — and the estimate lands within the p=12 error bound of exact."""
+def test_stream_cascade_hll_estimates_match_batch_sketch(spark, stream_dirs):
+    """HLL distincts through the chained cascade: ``hll_sketch_agg`` then
+    ``hll_union_agg`` carry one sketch per (domain, window) through every
+    stateful stage, so each CLOSED hour's streamed estimate is EXACTLY the
+    batch estimate over the same rows — the streamed sketch is the batch
+    sketch, not an approximation of it — and lands within the lgK-12 error
+    bound of exact."""
     import datetime
 
-    from tstore_spark.operators.sketches import hll_sketch, with_hll_estimate
+    from tstore_spark.operators.sketches import hll_estimate
 
     base, src, sdf = stream_dirs
     stream = read_pages_stream(spark, src, sdf.schema, max_files_per_trigger=2)
@@ -147,18 +148,17 @@ def test_stream_cascade_hll_registers_match_batch_sketch(spark, stream_dirs):
         F.date_trunc("hour", F.col("warc_ts")).alias("window_start"),
         "lang", "html",
     )
-    batch_sk = hll_sketch(keyed, ["domain", "window_start"], "lang")
-    b_sk = {(r["domain"], r["window_start"]):
-            [(e["reg"], e["rank"]) for e in r["hll"]] for r in batch_sk.collect()}
-    g_rows = got.collect()
+    batch_sk = keyed.groupBy("domain", "window_start").agg(
+        hll_estimate(F.hll_sketch_agg("lang")).alias("est"))
+    b_est = {(r["domain"], r["window_start"]): r["est"] for r in batch_sk.collect()}
+    g_rows = got.withColumn("est", hll_estimate("hll")).collect()
     max_ts = sdf.agg(F.max("warc_ts")).head()[0]
-    closed = {k for k in b_sk
+    closed = {k for k in b_est
               if k[1] + datetime.timedelta(hours=1) <= max_ts}
-    g_sk = {(r["domain"], r["window_start"]):
-            [(e["reg"], e["rank"]) for e in r["hll"]] for r in g_rows}
-    assert set(g_sk) == closed
+    est = {(r["domain"], r["window_start"]): r["est"] for r in g_rows}
+    assert set(est) == closed
     for k in closed:
-        assert g_sk[k] == b_sk[k], f"register drift at {k}"
+        assert est[k] == b_est[k], f"estimate drift at {k}"
 
     # counts/bytes still exact alongside the sketch column
     batch = rollup_from_raw(sdf, "1h")
@@ -167,9 +167,7 @@ def test_stream_cascade_hll_registers_match_batch_sketch(spark, stream_dirs):
     for r in g_rows:
         assert (r["doc_count"], r["bytes_total"]) == b_cnt[(r["domain"], r["window_start"])]
 
-    # estimate from the streamed registers is within the sketch error of exact
-    est = {(r["domain"], r["window_start"]): r["distinct_est"]
-           for r in with_hll_estimate(got).collect()}
+    # estimate from the streamed sketches is within the sketch error of exact
     exact = {(r["domain"], r["window_start"]): r["n"]
              for r in keyed.groupBy("domain", "window_start")
              .agg(F.countDistinct("lang").alias("n")).collect()}

@@ -500,6 +500,14 @@ def main(sf_dir: str) -> int:
           "ArrowEvalPython" not in p and "BatchEvalPython" not in p,
           "codes + integer dots are codegen expressions")
 
+    # 41. HLL distincts: built-in sketch aggregates + sketches.hll_estimate,
+    # so no estimator UDF rides any HLL plan
+    for name in ("hll_distinct_users", "hll_union_daily", "hyperball_centrality"):
+        p = plan_of(qs[name](spark, sf_dir))
+        check(f"{name}.jvm",
+              "ArrowEvalPython" not in p and "BatchEvalPython" not in p,
+              "HLL build, union and estimate are built-in JVM expressions")
+
     spark.stop()
     print(f"\n{'ALL PASS' if not failures else 'FAILURES: ' + ', '.join(failures)}")
     return 1 if failures else 0

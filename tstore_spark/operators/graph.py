@@ -1260,32 +1260,28 @@ def hyperball(
     edges — ``(id, ball_0..ball_{t_max}, harmonic_est)``.
 
     Each node starts with the sketch of {itself}; round t replaces every
-    node's counter with the register-max merge of its own and its
-    successors' counters, so after t rounds the counter sketches
-    ``B(v, t) = {u : d(v,u) <= t}`` exactly (sketch of a union IS the
-    max-merge — the deterministic-HLL property operators/sketches.py
-    proves). ``harmonic_est`` folds the ball increments:
-    ``sum_t (|B(v,t)| - |B(v,t-1)|) / t`` — with ``direction="in"`` this
-    estimates harmonic centrality (sum of 1/d over nodes that REACH v),
-    the centrality Boldi-Vigna recommend for web graphs.
+    node's sketch with the union of its own and its successors' sketches,
+    so after t rounds the sketch counts ``B(v, t) = {u : d(v,u) <= t}``
+    (the sketch of a union IS the union of sketches). ``harmonic_est``
+    folds the ball increments: ``sum_t (|B(v,t)| - |B(v,t-1)|) / t`` —
+    with ``direction="in"`` this estimates harmonic centrality (sum of 1/d
+    over nodes that REACH v), the centrality Boldi-Vigna recommend for web
+    graphs.
 
-    Exactness/determinism: registers are xxhash64-derived and merge by
-    max, so every round's state — and hence every estimate — is
-    bit-identical at any parallelism; the only Python is the vectorized
-    Arrow estimator over node rows.
+    Counters are Spark's built-in HLL sketches with lgK ``p``
+    (``hll_sketch_agg`` / ``hll_union_agg``), estimated through
+    ``sketches.hll_estimate``, so every estimate is identical at any
+    parallelism and no Python runs.
 
-    Scale shape (the reason this operator exists): state is at most
-    ``min(|B(v,t)|, 2^p)`` register rows per node — the exact pair table
+    Scale shape (the reason this operator exists): state is ONE sketch of
+    at most 2^p registers per node — the exact pair table
     :func:`neighborhood_exact` carries is replaced by a CONSTANT-size
     counter, which is what makes neighborhood functions computable on
-    billion-node graphs. Each round is one edge join + one register
-    groupBy (uniform keys, map-side combined), lineage cut per round with
-    localCheckpoint — the module's standing Pregel-on-DataFrames shape.
+    billion-node graphs. Each round is one edge join + one sketch-union
+    groupBy by node id, lineage cut per round with localCheckpoint — the
+    module's standing Pregel-on-DataFrames shape.
     """
-    from tstore_spark.operators.sketches import (
-        hll_register_columns,
-        with_hll_estimate,
-    )
+    from tstore_spark.operators.sketches import hll_estimate
 
     if t_max < 1:
         raise ValueError(f"t_max must be >= 1, got {t_max}")
@@ -1295,35 +1291,25 @@ def hyperball(
     if direction == "in":
         e = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     e = e.dropDuplicates(["src", "dst"]).localCheckpoint(eager=False)
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
+    nodes = e.select(F.col("src").alias("id")).union(e.select(F.col("dst").alias("id")))
+    state = (
+        nodes.groupBy("id")
+        .agg(F.hll_sketch_agg("id", p).alias("hll"))
+        .localCheckpoint(eager=False)
     )
-    reg, rank = hll_register_columns(F.col("id"), p)
-    state = nodes.select(
-        "id", reg.alias("reg"), rank.alias("rank")
-    ).localCheckpoint(eager=False)
 
     def _est(st: DataFrame, t: int) -> DataFrame:
-        arr = st.groupBy("id").agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("reg"), F.col("rank")))
-            ).alias("hll")
-        )
-        return with_hll_estimate(arr, p=p).select(
-            "id", F.col("distinct_est").alias(f"ball_{t}")
-        )
+        return st.select("id", hll_estimate("hll").alias(f"ball_{t}"))
 
     wide = _est(state, 0)
     for t in range(1, t_max + 1):
         prop = e.join(state.withColumnRenamed("id", "dst"), "dst").select(
-            F.col("src").alias("id"), "reg", "rank"
+            F.col("src").alias("id"), "hll"
         )
         state = (
             state.unionByName(prop)
-            .groupBy("id", "reg")
-            .agg(F.max("rank").alias("rank"))
+            .groupBy("id")
+            .agg(F.hll_union_agg("hll").alias("hll"))
             .localCheckpoint(eager=False)
         )
         wide = wide.join(_est(state, t), "id")

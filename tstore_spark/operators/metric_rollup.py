@@ -20,7 +20,7 @@ flagship) but parameterized over any table shape — used for the driver's
 
 Scale note (100 TB): state size per window is O(#distinct cents values) and
 O(#distinct ids) — for true high-cardinality id domains swap ``id_set`` for a
-deterministic HLL sketch (same cascade shape, mergeable registers).
+built-in HLL sketch (``id_sketch=True``: same cascade shape, mergeable).
 """
 
 from __future__ import annotations
@@ -68,18 +68,19 @@ def metric_rollup_from_raw(
     value_col: str = "value",
     id_col: str = "user_id",
     id_sketch: bool = False,
-    sketch_p: int = 12,
     value_sketch: bool = False,
     dd_gamma: float = 1.02,
 ) -> DataFrame:
     """One tier from raw events; carries mergeable state for the cascade.
 
-    id_sketch=True replaces the exact ``id_set`` with a deterministic HLL
-    register array (operators/sketches.py) — the high-cardinality-id scale
-    path: state per window becomes O(2^p) instead of O(#ids), the cascade
-    merges registers with max (still exactly mergeable: cascaded sketch ==
-    from-raw sketch, bit-identical), and ``user_distinct`` becomes the HLL
-    estimate (rounded).
+    id_sketch=True replaces the exact ``id_set`` with a built-in HLL sketch
+    column ``hll`` (``hll_sketch_agg``, lgK 12) — the high-cardinality-id
+    scale path: state per window is a fixed-size binary instead of O(#ids),
+    built in the same single scan as the exact path (``hll_sketch_agg`` in
+    stage 1, ``hll_union_agg`` in stage 2), the cascade merges it with
+    ``hll_union_agg``, and ``user_distinct`` becomes
+    ``sketches.hll_estimate`` — equal between cascaded and from-raw tiers
+    and at any parallelism.
 
     value_sketch=True replaces the exact (cents -> count) histogram with a
     DDSketch bucket array (operators/ddsketch.py) — the wide-value-domain
@@ -108,7 +109,9 @@ def metric_rollup_from_raw(
     # salt for hot keys); stage 2 merges the bounded len-level rows. The
     # per-window value sum is recovered exactly as sum(cents * count).
     s1_aggs = [F.count(F.lit(1)).alias("_cnt")]
-    if not id_sketch:
+    if id_sketch:
+        s1_aggs.append(F.hll_sketch_agg("_id").alias("_hll"))
+    else:
         s1_aggs.append(F.collect_set("_id").alias("_is"))
     s1 = base.groupBy(key, "window_start", "_cents").agg(*s1_aggs)
     s2_aggs = [
@@ -128,7 +131,9 @@ def metric_rollup_from_raw(
                 )
             ).alias("_h")
         )
-    if not id_sketch:
+    if id_sketch:
+        s2_aggs.append(F.hll_union_agg("_hll").alias("hll"))
+    else:
         s2_aggs.append(
             F.array_sort(F.array_distinct(F.flatten(F.collect_list("_is")))).alias("id_set")
         )
@@ -140,7 +145,7 @@ def metric_rollup_from_raw(
             "window_start",
             "event_count",
             "value_cents",
-            *([] if id_sketch else ["id_set"]),
+            "hll" if id_sketch else "id_set",
             *(
                 []
                 if value_sketch
@@ -156,11 +161,6 @@ def metric_rollup_from_raw(
 
         dd = dd_sketch(base, [key, "window_start"], "_cents", gamma=dd_gamma)
         out = out.join(dd, [key, "window_start"])
-    if id_sketch:
-        from tstore_spark.operators.sketches import hll_sketch
-
-        sk = hll_sketch(base, [key, "window_start"], "_id", p=sketch_p)
-        out = out.join(sk, [key, "window_start"])
     return out
 
 
@@ -170,8 +170,9 @@ def metric_rollup_cascade(child: DataFrame, tier: str, key: str = "event_type") 
     The exact-histogram path fuses the merge into the main groupBy (flatten
     of paired child histograms -> one Arrow merge kernel): a single shuffle,
     no explode/regroup/join — same shape as ``rollup.rollup_cascade``, values
-    bit-identical (integer count sums). Sketch paths (dd/hll) keep their
-    dedicated merge joins."""
+    bit-identical (integer count sums). The HLL sketch merges in the same
+    groupBy (``hll_union_agg``); only the DDSketch path keeps its dedicated
+    merge join."""
     unit = TIERS[tier]
     ws = F.date_trunc(unit, F.col("window_start"))
     if dict(child.dtypes).get("window_start") == "timestamp_ntz":
@@ -184,7 +185,9 @@ def metric_rollup_cascade(child: DataFrame, tier: str, key: str = "event_type") 
         F.sum("event_count").alias("event_count"),
         F.sum("value_cents").alias("value_cents"),
     ]
-    if not has_sketch:
+    if has_sketch:
+        main_aggs.append(F.hll_union_agg("hll").alias("hll"))
+    else:
         main_aggs.append(
             F.array_sort(F.array_distinct(F.flatten(F.collect_list("id_set")))).alias("id_set")
         )
@@ -211,11 +214,6 @@ def metric_rollup_cascade(child: DataFrame, tier: str, key: str = "event_type") 
 
         dd = dd_merge(child.select(key, ws, "dd", "dd_zeros"), [key, "window_start"])
         out = out.join(dd, [key, "window_start"])
-    if has_sketch:
-        from tstore_spark.operators.sketches import hll_merge
-
-        sk = hll_merge(child.select(key, ws, "hll"), [key, "window_start"])
-        out = out.join(sk, [key, "window_start"])
     return out
 
 
@@ -223,15 +221,9 @@ def finalize(
     tier_df: DataFrame,
     key: str = "event_type",
     use_jvm: bool = False,
-    sketch_p: int | None = None,
     dd_gamma: float = 1.02,
 ) -> DataFrame:
-    """Scalar-only view of a tier (drops the mergeable state columns).
-
-    ``sketch_p`` must match the precision the sketch was built with
-    (``metric_rollup_from_raw(sketch_p=...)``) — the estimator's register
-    count m = 2^p is baked into the harmonic mean, so a mismatched p yields
-    silently wrong ``user_distinct``. Defaults to ``sketches.DEFAULT_P``."""
+    """Scalar-only view of a tier (drops the mergeable state columns)."""
     if "dd" in tier_df.columns:
         from tstore_spark.operators.ddsketch import dd_quantiles_udf
 
@@ -247,11 +239,9 @@ def finalize(
     else:
         p = _cents_hist_percentiles(F.col("hist_cents"), F.col("hist_cnts"))
     if "hll" in tier_df.columns:
-        from tstore_spark.operators.sketches import DEFAULT_P, hll_estimate_udf
+        from tstore_spark.operators.sketches import hll_estimate
 
-        user_distinct = F.round(
-            hll_estimate_udf(DEFAULT_P if sketch_p is None else sketch_p)(F.col("hll"))
-        ).cast("long")
+        user_distinct = hll_estimate("hll")
     else:
         user_distinct = F.size("id_set").cast("long")
     out = (
@@ -272,18 +262,17 @@ def metric_rollup_all_tiers(
     value_col: str = "value",
     id_col: str = "user_id",
     id_sketch: bool = False,
-    sketch_p: int = 12,
     value_sketch: bool = False,
     dd_gamma: float = 1.02,
 ) -> dict[str, DataFrame]:
     """raw -> 1m -> 1h -> 1d (with state; apply :func:`finalize` to present).
 
-    When ``id_sketch=True`` / ``value_sketch=True``, pass the same
-    ``sketch_p`` / ``dd_gamma`` to :func:`finalize`."""
+    When ``value_sketch=True``, pass the same ``dd_gamma`` to
+    :func:`finalize`."""
     tiers: dict[str, DataFrame] = {}
     tiers["1m"] = metric_rollup_from_raw(
         df, "1m", key, time_col, value_col, id_col,
-        id_sketch=id_sketch, sketch_p=sketch_p,
+        id_sketch=id_sketch,
         value_sketch=value_sketch, dd_gamma=dd_gamma,
     )
     tiers["1h"] = metric_rollup_cascade(tiers["1m"], "1h", key)

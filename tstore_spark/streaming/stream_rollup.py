@@ -79,7 +79,6 @@ def stream_rollup_cascade(
     key_col: Column | None = None,
     time_col: str = "warc_ts",
     distinct_col: str | Column | None = None,
-    sketch_p: int | None = None,
 ) -> DataFrame:
     """Fully-streaming tier cascade in ONE query — chained time-window
     aggregations (Spark >= 3.5 multiple stateful operators): each stage
@@ -90,89 +89,45 @@ def stream_rollup_cascade(
     Each window emits exactly once when the watermark passes its end.
 
     Exact count / byte sums always chain. With ``distinct_col`` set, a
-    deterministic HLL sketch (operators/sketches.py — the batch tiers' own
-    sketch, same xxhash64 registers) chains too: the register index joins the
-    grouping key, ``max(rank)`` carries register state through every stage
-    (max is the exact HLL merge), and a final same-width re-window collapses
-    the register rows into one sorted ``hll`` array per (domain, window) —
-    register-identical to the batch ``hll_sketch`` over the same closed
-    window. State per (domain, window) is bounded by min(rows, 2^p)
-    register rows — the same state the batch sketch shuffles. (The older
-    ``approx_count_distinct`` path in ``stream_rollup_1m`` keeps no
-    re-mergeable state across stages, which is why it never cascaded.)
+    built-in HLL sketch chains too: ``hll_sketch_agg`` in the first stage,
+    ``hll_union_agg`` in every later one — one sketch of state per
+    (domain, window), the same sketch the batch tiers build. Its
+    ``sketches.hll_estimate`` equals the batch estimate over the same closed
+    window. (The older ``approx_count_distinct`` path in
+    ``stream_rollup_1m`` keeps no re-mergeable state across stages, which is
+    why it never cascaded.)
 
     Returns the FINAL tier as (domain, window_start, doc_count, bytes_total
-    [, hll]). Estimate distincts downstream with
-    ``sketches.with_hll_estimate`` (same p).
+    [, hll]). Estimate distincts downstream with ``sketches.hll_estimate``.
     """
     if list(tiers) != ["1m", "1h", "1d"][: len(tiers)] or not tiers:
         raise ValueError(f"tiers must be a prefix of ('1m','1h','1d'), got {tiers}")
     key = key_col if key_col is not None else domain_of("url")
     src = pages_stream.withWatermark(time_col, watermark)
-    if distinct_col is None:
-        agg = src.groupBy(
-            F.window(F.col(time_col), _TIER_WIDTH[tiers[0]]), key.alias("domain")
-        ).agg(
-            F.count(F.lit(1)).alias("doc_count"),
-            F.sum(F.octet_length("html")).alias("bytes_total"),
-        )
-        for tier in tiers[1:]:
-            agg = agg.groupBy(
-                F.window(F.window_time("window"), _TIER_WIDTH[tier]), "domain"
-            ).agg(
-                F.sum("doc_count").alias("doc_count"),
-                F.sum("bytes_total").alias("bytes_total"),
-            )
-        return agg.select(
-            "domain",
-            F.col("window.start").alias("window_start"),
-            "doc_count",
-            "bytes_total",
-        )
-
-    from tstore_spark.operators.sketches import DEFAULT_P, hll_register_columns
-
-    p = DEFAULT_P if sketch_p is None else sketch_p
-    reg, rank = hll_register_columns(distinct_col, p)
-    # every row lands in exactly ONE register group (reg = f(hash(value))),
-    # so per-register doc/byte partial sums re-total exactly downstream
-    agg = src.groupBy(
-        F.window(F.col(time_col), _TIER_WIDTH[tiers[0]]),
-        key.alias("domain"),
-        reg.alias("_reg"),
-    ).agg(
+    aggs = [
         F.count(F.lit(1)).alias("doc_count"),
         F.sum(F.octet_length("html")).alias("bytes_total"),
-        F.max(rank).alias("_rank"),
-    )
-    for tier in tiers[1:]:
-        agg = agg.groupBy(
-            F.window(F.window_time("window"), _TIER_WIDTH[tier]), "domain", "_reg"
-        ).agg(
-            F.sum("doc_count").alias("doc_count"),
-            F.sum("bytes_total").alias("bytes_total"),
-            F.max("_rank").alias("_rank"),
-        )
-    # final stage: same-width re-window (each window maps to itself) collapses
-    # register rows -> one row per (domain, window) with the sorted sparse
-    # register array, exactly hll_sketch's output shape
-    agg = agg.groupBy(
-        F.window(F.window_time("window"), _TIER_WIDTH[tiers[-1]]), "domain"
-    ).agg(
+    ]
+    merges = [
         F.sum("doc_count").alias("doc_count"),
         F.sum("bytes_total").alias("bytes_total"),
-        F.array_sort(
-            F.collect_list(
-                F.struct(F.col("_reg").alias("reg"), F.col("_rank").alias("rank"))
-            )
-        ).alias("hll"),
-    )
+    ]
+    if distinct_col is not None:
+        aggs.append(F.hll_sketch_agg(distinct_col).alias("hll"))
+        merges.append(F.hll_union_agg("hll").alias("hll"))
+    agg = src.groupBy(
+        F.window(F.col(time_col), _TIER_WIDTH[tiers[0]]), key.alias("domain")
+    ).agg(*aggs)
+    for tier in tiers[1:]:
+        agg = agg.groupBy(
+            F.window(F.window_time("window"), _TIER_WIDTH[tier]), "domain"
+        ).agg(*merges)
     return agg.select(
         "domain",
         F.col("window.start").alias("window_start"),
         "doc_count",
         "bytes_total",
-        "hll",
+        *(["hll"] if distinct_col is not None else []),
     )
 
 
@@ -187,11 +142,9 @@ def stream_rollup_cascade_ddsketch(
 ) -> DataFrame:
     """Percentile sketches THROUGH the fully-streaming tier cascade.
 
-    The HLL carry (``stream_rollup_cascade(distinct_col=...)``) works
-    because each row lands in exactly one register group; DDSketch has the
-    same property — each value lands in exactly ONE log-boundary bucket
-    (``ddsketch.dd_bucket``; the null bucket collects zeros/non-positives).
-    Per-(window, domain, bucket) integer counts therefore sum-merge through
+    Each value lands in exactly ONE log-boundary bucket
+    (``ddsketch.dd_bucket``; the null bucket collects zeros/non-positives),
+    so per-(window, domain, bucket) integer counts sum-merge through
     every chained stateful stage, and a final same-width re-window collapses
     bucket rows into the sparse sorted (b, cnt) array + zero count — the
     EXACT ``dd_sketch`` state the batch tier computes over the same closed
@@ -336,7 +289,7 @@ def stream_rollup_cascade_kmins(
 
     Bottom-k (``kmv_sketch``) is not a partial aggregate, but the per-bucket
     minimum is — so per-(window, domain, bucket) ``min(hash)`` merges
-    through every chained window agg exactly as HLL ranks merge by ``max``;
+    through every chained window agg as an ordinary ``min`` aggregate;
     a closed window's cell table equals the batch ``kmins_cells`` over the
     same rows register-exactly. State per (domain, window) is ≤ k cells.
 

@@ -7,8 +7,10 @@ import os
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from tstore_spark.datagen import attrs_pandas
+from tstore_spark.functions.timeparts import bucket_column
 from tstore_spark.functions.urls import domain_of
 from tstore_spark.model.tslong import TSLong
 from tstore_spark.sources.archive import apply_retention, open_archive, write_archive
@@ -86,14 +88,27 @@ def test_filter_monotonicity(spark, archive_dir):
     assert neither <= both <= full
 
 
-def test_id_filter_and_partition_pruning(spark, archive_dir, pages_pdf):
+def test_id_filter_and_partition_pruning(spark, archive_dir, pages_pdf, scan_files_read):
     dom = "d00.example.com"
     got = open_archive(spark, archive_dir, ids=[dom], with_attributes=False)
     exp = pages_pdf["url"].str.contains(f"//{dom}/").sum()
     assert got.df.count() == exp
-    # pruning proof: the physical plan's partition filters mention p_bucket + p_day
-    plan = got.df.where("warc_ts >= timestamp'2024-01-03'")._jdf.queryExecution().executedPlan().toString()
-    assert "p_bucket" in plan
+    # pruning proof: the scan reads exactly the files under dom's bucket
+    # directories (every day), and that is fewer than the whole table
+    b = spark.range(1).select(bucket_column(F.lit(dom), 4).alias("b")).first()["b"]
+    pages = os.path.join(archive_dir, "pages")
+    files = [
+        sub
+        for day in os.listdir(pages) if day.startswith("p_day=")
+        for sub in os.listdir(os.path.join(pages, day))
+        for f in os.listdir(os.path.join(pages, day, sub)) if f.endswith(".parquet")
+    ]
+    expected = files.count(f"p_bucket={b}")
+    assert 0 < expected < len(files)
+    read = scan_files_read(
+        lambda: open_archive(spark, archive_dir, ids=[dom], with_attributes=False).df
+    )
+    assert read == expected
 
 
 def test_column_selection(spark, archive_dir):

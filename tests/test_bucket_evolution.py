@@ -1,6 +1,8 @@
 """Bucket-spec evolution: metadata-only rebucketing with per-era pruning."""
 
 import os
+import time
+import uuid
 
 import pandas as pd
 import pytest
@@ -71,12 +73,50 @@ def test_metadata_roundtrip_and_append_preserves_specs(spark, evolved_archive):
     assert bucket_specs(meta) == [("0001-01-01", 2), ("2024-02-01", 8)]
 
 
-def test_id_filtered_read_exact_across_eras(spark, evolved_archive):
+def _jobs_while(spark, build):
+    """Spark jobs registered in a fresh job group while ``build()`` runs.
+    A marker job in a second group runs after it: once the status tracker
+    lists the marker, every earlier job of the probe group is listed too."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group, marker = f"probe-{uuid.uuid4().hex}", f"marker-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "probe")
+    try:
+        build()
+        sc.setJobGroup(marker, "marker")
+        spark.range(1).collect()
+        deadline = time.monotonic() + 30
+        while not tracker.getJobIdsForGroup(marker) and time.monotonic() < deadline:
+            time.sleep(0.05)
+        assert tracker.getJobIdsForGroup(marker), "marker job never registered"
+        return len(tracker.getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_id_filtered_read_exact_across_eras(spark, evolved_archive, scan_files_read):
     base, ids = evolved_archive
+    total_files = sum(
+        f.endswith(".parquet") for _root, _dirs, files in os.walk(os.path.join(base, "pages"))
+        for f in files
+    )
+    assert total_files == 12
     for probe in (["s0"], ["s3", "s11"], ids):
         got = open_archive(spark, base, ids=probe, with_attributes=False).df
         assert got.count() == 4 * len(probe)  # 4 days x 1 row/day/id
         assert {r["sensor"] for r in got.select("sensor").distinct().collect()} == set(probe)
+    # each era prunes to the probe's buckets under the spec owning its days
+    for probe, files in ((["s0"], 4), (["s3", "s11"], 5)):
+        read = scan_files_read(
+            lambda: open_archive(spark, base, ids=probe, with_attributes=False).df
+        )
+        assert read == files, (probe, read)
+        # building the open computes no bucket on the cluster
+        jobs = _jobs_while(
+            spark, lambda: open_archive(spark, base, ids=probe, with_attributes=False)
+        )
+        assert jobs == 0, (probe, jobs)
 
 
 def test_evolution_guards(spark, tmp_path):

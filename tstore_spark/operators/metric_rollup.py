@@ -395,10 +395,11 @@ def refresh_tier_incremental(
     if is_ntz:
         ws = ws.cast("timestamp_ntz")
 
-    # one job over the changes computes the invalidation set; it is collected
-    # into a LOCAL relation (bounded by #touched windows x keys — window
-    # metadata, never row data) so the three consumers below embed it as a
-    # broadcast literal instead of re-running the changes plan
+    # one job over the changes computes the invalidation set (bounded by
+    # #touched windows x keys — window metadata, never row data) and collects
+    # it to the driver; createDataFrame turns the rows back into a Python-RDD
+    # LogicalRDD, which the three consumers below broadcast-join instead of
+    # re-running the changes plan (every job reading it starts Python workers)
     inval_q = changes.select(F.col(key), ws.alias("window_start")).distinct()
     rows = inval_q.collect()
     report = {"windows_invalidated": len(rows)}

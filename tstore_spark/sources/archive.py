@@ -34,7 +34,7 @@ import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tstore_spark.functions.filters import time_range_filter
@@ -120,7 +120,12 @@ def bucket_expr_for_specs(
 ) -> Column:
     """Per-row bucket under the spec owning the row's day: a CASE chain
     from the newest spec down (first match wins). Pure codegen — spec
-    evolution adds one comparison per historical spec, nothing else."""
+    evolution adds one comparison per historical spec, nothing else.
+
+    This is the one bucket definition: appends derive ``p_bucket`` with it,
+    and :func:`open_archive` prunes id reads with it applied to literal ids
+    (``p_bucket IN (bucket(lit(id)), ...)``), so reads find exactly the
+    directories writes chose."""
     day = F.col(day_col) if isinstance(day_col, str) else day_col
     expr = bucket_column(id_col, specs[0][1])
     for from_day, n in specs[1:]:
@@ -368,6 +373,13 @@ def open_archive(
     """Open the archive as a TSLong; one Catalyst plan does scan + prune +
     filter + broadcast-join (the reference's steps 2-4 collapsed).
 
+    ``ids`` prune bucket directories with the write path's own bucket rule,
+    :func:`bucket_expr_for_specs`, over literal ids: a partition-column-only
+    predicate, so building the open runs no Spark job. With one bucket spec
+    Catalyst folds it to ``p_bucket IN (<ints>)``; on an evolved archive each
+    entry is a CASE over ``p_day`` that partition pruning evaluates per
+    directory.
+
     Backend seam: an archive whose metadata says ``backend: iceberg`` (and a
     session with the catalog bound) reads the real catalog table; everything
     else reads the emulated parquet layout."""
@@ -400,7 +412,10 @@ def open_archive(
     if ids is not None:
         ids = [str(i) for i in ids]
         df = df.where(F.col(d.id_var).isin(ids))
-        df = df.where(_bucket_prune_predicate(spark, ids, bucket_specs(meta)))
+        specs = bucket_specs(meta)
+        df = df.where(
+            F.col("p_bucket").isin([bucket_expr_for_specs(F.lit(v), "p_day", specs) for v in ids])
+        )
 
     df = df.drop("p_day", "p_bucket")  # hidden partitioning: logical schema never sees them
 
@@ -415,52 +430,6 @@ def open_archive(
         TableDescriptor(d.id_var, d.time_var, d.ts_vars, statics, d.partitioning),
     )
     return wrapped.query(ts_variables=ts_variables, columns=columns) if (ts_variables or columns) else wrapped
-
-
-def _bucket_prune_predicate(
-    spark: SparkSession, ids: list[str], specs: list[tuple[str, int]]
-) -> Column:
-    """Bucket-pruning predicate across evolved specs: for each spec's day
-    range, ``p_bucket ∈ buckets-under-that-spec`` — OR'd over specs, so a
-    query on an archive that rebucketed 8→32 still prunes both eras. One
-    Spark job computes the id buckets under EVERY spec (the _buckets_of
-    single-pass discipline)."""
-    if len(specs) == 1:
-        return F.col("p_bucket").isin(_buckets_of(spark, ids, specs[0][1]))
-    df = spark.createDataFrame([(str(v),) for v in ids], "v string")
-    sel = df.select(
-        *[
-            bucket_column(F.col("v"), n).alias(f"b{i}")
-            for i, (_fd, n) in enumerate(specs)
-        ]
-    )
-    rows = sel.collect()
-    pred = None
-    for i, (from_day, _n) in enumerate(specs):
-        buckets = sorted({int(r[f"b{i}"]) for r in rows})
-        seg = F.col("p_bucket").isin(buckets)
-        seg = seg & (F.col("p_day") >= F.lit(from_day).cast("date"))
-        if i + 1 < len(specs):
-            seg = seg & (F.col("p_day") < F.lit(specs[i + 1][0]).cast("date"))
-        pred = seg if pred is None else (pred | seg)
-    return pred
-
-
-def _buckets_of(spark: SparkSession, values: list[str], num_buckets: int) -> list[int]:
-    """Evaluate the bucket transform for ALL filter ids in ONE Spark job.
-
-    A per-id ``spark.range(1)...head()`` loop costs one driver-blocking job
-    per id — seconds of pure scheduling overhead before the real scan when a
-    query filters on hundreds of ids. One local-relation select computes
-    every bucket in a single pass."""
-    df = spark.createDataFrame([(str(v),) for v in values], "v string")
-    rows = df.select(bucket_column(F.col("v"), num_buckets).alias("b")).collect()
-    return sorted({int(r["b"]) for r in rows})
-
-
-def _bucket_of(spark: SparkSession, value: str, num_buckets: int) -> int:
-    """Driver-side evaluation of the bucket transform for one id."""
-    return _buckets_of(spark, [value], num_buckets)[0]
 
 
 # -- retention (north rule: per-tier expiry) ----------------------------------
